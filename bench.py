@@ -6,7 +6,8 @@ Targets are in BASELINE.md (self-declared; the reference publishes none —
 see SURVEY.md §6).  Env knobs:
 
 * ``SPARK_GRAFT_SF_DIR``  — fixture dir (default /root/testdata/sf0.1)
-* ``SPARK_GRAFT_CPUS``    — local core count (default 32)
+* ``SPARK_GRAFT_CPUS``    — local core count (default: the cores this
+  process may run on)
 * ``SPARK_GRAFT_BENCH_REPEATS`` — runs per query (default 3)
 
 NOISE CONTROL: the host carries outside-container load that swings single
@@ -179,7 +180,7 @@ HEADLINE = [
     "multimodal_decode_qoi_pixels",
     "tokenizer_unigram_encode",
     "text_perplexity_filter",
-    # round-12 additions: from-spec DEFLATE decode, WordPiece tokenizer,
+    # round-12 additions: DEFLATE decode, WordPiece tokenizer,
     # zero-shuffle phrase search, hourly linear resample
     "multimodal_decode_deflate",
     "tokenizer_wordpiece_encode",
@@ -192,7 +193,7 @@ HEADLINE = [
     "multimodal_decode_tiff_lzw",
     "multimodal_decode_zstd_frames",
     "stat_kruskal_wallis",
-    # round-14 additions: .xz container walk + full LZMA2 range decode,
+    # round-14 additions: .xz container + range-coded LZMA2 decode,
     # compact salted-geo fold twin (the sf1 sweep's pair-multiset check)
     "multimodal_decode_xz_frames",
     "multimodal_decode_lzma2",

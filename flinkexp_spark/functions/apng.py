@@ -33,6 +33,7 @@ import zlib
 
 import numpy as np
 
+from flinkexp_spark.functions.codecs import CodecError, zlib_decompress
 from flinkexp_spark.functions.png import (
     PNG_SIGNATURE,
     PngError,
@@ -215,8 +216,8 @@ def decode_apng(data: bytes) -> tuple[np.ndarray, dict]:
         # Validate (but do not emit) the static default image: it must be a
         # well-formed full-canvas subimage even though no frame shows it.
         try:
-            raw0 = zlib.decompress(bytes(default_stream))
-        except zlib.error as exc:
+            raw0 = zlib_decompress(bytes(default_stream))
+        except CodecError as exc:
             raise ApngError(f"default image: corrupt deflate stream: {exc}")
         flat0, used0 = _decode_subimage(memoryview(raw0), cw, ch_, 4)
         if used0 != len(raw0):
@@ -227,10 +228,10 @@ def decode_apng(data: bytes) -> tuple[np.ndarray, dict]:
         zip(fctls, streams)
     ):
         try:
-            raw = zlib.decompress(bytes(comp))
-        except zlib.error as exc:
+            raw = zlib_decompress(bytes(comp))
+        except CodecError as exc:
             # a missing/empty/corrupt frame stream must surface as a typed
-            # decode error with the frame index, never a raw zlib.error
+            # decode error with the frame index
             raise ApngError(f"frame {i}: corrupt deflate stream: {exc}")
         flat, used = _decode_subimage(memoryview(raw), w, h, 4)
         if used != len(raw):

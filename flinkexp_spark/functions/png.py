@@ -38,6 +38,8 @@ import zlib
 
 import numpy as np
 
+from flinkexp_spark.functions.codecs import CodecError, zlib_decompress
+
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 # Channels per pixel by color type (bit depth 8 only).  Palette rows store
@@ -367,8 +369,8 @@ def decode_png(data: bytes) -> tuple[np.ndarray, dict]:
         raise PngError("no IDAT data")
 
     try:
-        raw = memoryview(zlib.decompress(bytes(idat)))
-    except zlib.error as exc:  # corrupt DEFLATE stream
+        raw = memoryview(zlib_decompress(bytes(idat)))
+    except CodecError as exc:  # corrupt DEFLATE stream
         raise PngError(f"IDAT inflate failed: {exc}") from None
 
     ch = _CHANNELS[color_type]

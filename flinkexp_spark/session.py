@@ -18,6 +18,10 @@ state backend (reference: study/pom.xml:72).  Our equivalent is a configured
   (and comparable against the DuckDB oracle, which is UTC-naive).
 * **shuffle partitions ~ cores** locally; at cluster scale AQE coalescing
   makes the static number mostly irrelevant, but we still expose it.
+* **host-sized local defaults**: cores and driver heap come from the host
+  the session starts on (:func:`default_cores`,
+  :func:`default_driver_memory`) unless ``SPARK_GRAFT_CPUS`` /
+  ``SPARK_GRAFT_DRIVER_MEM`` set them.
 """
 
 from __future__ import annotations
@@ -26,9 +30,34 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = ["get_session", "default_cores", "default_driver_memory"]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else the number of cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the memory this process may use:
+    the smaller of ``MemTotal`` and the cgroup's ``memory.max``.  The other
+    half is left to the Python workers and the JVM's off-heap memory."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open(meminfo) as f:
+        limit = next(
+            int(line.split()[1]) * 1024 for line in f if line.startswith("MemTotal:")
+        )
+    try:
+        with open(cgroup_max) as f:
+            cap = f.read().strip()
+    except OSError:
+        cap = "max"
+    if cap != "max":
+        limit = min(limit, int(cap))
+    return f"{limit // 2 // 2**20}m"
 
 
 def get_session(
@@ -42,9 +71,9 @@ def get_session(
     In local mode there is one JVM; on a real cluster the same config applies
     unchanged — nothing here assumes local execution.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cores()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nshuffle = shuffle_partitions or cpus
 
     # Before the JVM launches: make google.protobuf importable (natively or
     # via the SDK bridge) so transformWithStateInPandas workers — which
@@ -88,7 +117,7 @@ def get_session(
         # so epoch arithmetic and window() work (see datasets.load).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -8,11 +8,7 @@ deliverable requires.
 
 Usage:
   python tools/profile_query.py name1,name2 [--repeats 3] \
-      [--plans-dir plans/r14 --suffix before] [--sf-dir DIR] [--jobs]
-
-`--jobs` additionally prints per-job wall times from a SparkListener-free
-poor-man's splitter: each repeat is wrapped in setJobDescription so the
-(disabled) UI is not needed; we time construction and action separately.
+      [--plans-dir plans/r14 --suffix before] [--sf-dir DIR]
 """
 
 from __future__ import annotations
